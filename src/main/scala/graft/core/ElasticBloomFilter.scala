@@ -1,6 +1,5 @@
 package graft.core
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
 /** Elastic Bloom Filter — a dynamically resizable Bloom filter with
@@ -40,8 +39,8 @@ import java.nio.ByteBuffer
   * millions of small arrays; at 32 aggregation threads G1 degraded
   * progressively (humongous-region fragmentation: identical runs went
   * 3.7s -> 16.9s within one JVM). Expansion/compression/merge are
-  * single passes over the flat array; canonical serialization is one
-  * primitive sort (pairs order = bucket asc, fp asc).
+  * single passes over the flat array; canonical serialization scatters
+  * fingerprints by bucket and sorts within buckets (bucket asc, fp asc).
   *
   * == Deviations from the paper (documented deliberately) ==
   *  - Buckets hold exact unbounded fingerprint multisets (the paper
@@ -313,94 +312,125 @@ final class Ebf(
   def fprBound: Double =
     math.pow(1.0 - math.exp(-k.toDouble * n / numBuckets), k.toDouble)
 
-  /** Canonical serialization: one primitive sort of the pair array
-    * yields (bucket asc, fp asc); counts as varints, fingerprints
-    * bit-packed at the current width. Byte-identical for equal content. */
+  /** Canonical serialization: pairs in (bucket asc, fp asc) order;
+    * counts as varints, fingerprints bit-packed at the current width.
+    * Byte-identical for equal content. Written into one exactly-sized
+    * array ([[sizeBytes]]). */
   def toBytes: Array[Byte] = {
+    val cost = countsCost
+    val out = new Array[Byte](Ebf.HeaderBytes + cost.bytes + fpBytes)
+    val hdr = ByteBuffer.wrap(out)
+    hdr.putInt(Ebf.MAGIC)
+    hdr.putInt(m0); hdr.putInt(k); hdr.putInt(l0); hdr.putInt(level)
+    hdr.putInt(alphaNum); hdr.putInt(alphaDen)
+    hdr.putLong(seed); hdr.putLong(n)
+    hdr.put((if (cost.sparseMode) 1 else 0).toByte)
+    val pos = writeCounts(out, Ebf.HeaderBytes, cost)
+    if (fpWidth > 0) writeFingerprints(out, pos)
+    out
+  }
+
+  /** Exact length of [[toBytes]], computed without serializing. */
+  def sizeBytes: Int = Ebf.HeaderBytes + countsCost.bytes + fpBytes
+
+  /** Bit-packed fingerprint section length: ceil(numPairs * w / 8). */
+  private def fpBytes: Int = ((numPairs.toLong * fpWidth + 7) / 8).toInt
+
+  /** Counts section: dense varints, or a sparse (nnz, then
+    * index-delta/count pairs) list when that is byte-cheaper. The web's
+    * long tail makes most per-host filters nearly empty, where the
+    * dense form pays one byte per EMPTY bucket (1 KiB at m0=1024);
+    * sparse costs ~2 bytes per occupied bucket. The representation is
+    * chosen by exact byte cost — a pure function of content — so equal
+    * filters serialize identically under any merge ordering. */
+  private def countsCost: Ebf.CountsCost = {
     val m = numBuckets
-    val w = fpWidth
-    val sorted = java.util.Arrays.copyOf(pairs, numPairs)
-    java.util.Arrays.sort(sorted)
-    val bos = new ByteArrayOutputStream(64 + m + numPairs * 2)
-    val out = new DataOutputStream(bos)
-    out.writeInt(Ebf.MAGIC)
-    out.writeInt(m0); out.writeInt(k); out.writeInt(l0); out.writeInt(level)
-    out.writeInt(alphaNum); out.writeInt(alphaDen)
-    out.writeLong(seed); out.writeLong(n)
-    // Counts section: dense varints, or a sparse (nnz, then
-    // index-delta/count pairs) list when that is byte-cheaper. The web's
-    // long tail makes most per-host filters nearly empty, where the
-    // dense form pays one byte per EMPTY bucket (1 KiB at m0=1024);
-    // sparse costs ~2 bytes per occupied bucket. The representation is
-    // chosen by exact byte cost — a pure function of content — so equal
-    // filters serialize identically under any merge ordering.
     var dense = 0
+    var sparse = 0
     var nnz = 0
-    var sparseCost = 0
     var prev = -1
     var b = 0
     while (b < m) {
       val c = counts(b)
-      dense += varintLen(c)
+      dense += Ebf.varintLen(c)
       if (c != 0) {
         nnz += 1
-        sparseCost += varintLen(b - prev - 1) + varintLen(c)
+        sparse += Ebf.varintLen(b - prev - 1) + Ebf.varintLen(c)
         prev = b
       }
       b += 1
     }
-    sparseCost += varintLen(nnz)
-    val sparseMode = sparseCost < dense
-    out.writeByte(if (sparseMode) 1 else 0)
-    if (sparseMode) {
-      writeVarInt(out, nnz)
-      prev = -1
-      b = 0
+    new Ebf.CountsCost(dense, sparse + Ebf.varintLen(nnz), nnz)
+  }
+
+  /** Writes the counts section at `pos0`; returns the position after it. */
+  private def writeCounts(out: Array[Byte], pos0: Int, cost: Ebf.CountsCost): Int = {
+    val m = numBuckets
+    var pos = pos0
+    var b = 0
+    if (cost.sparseMode) {
+      pos = Ebf.putVarInt(out, pos, cost.nnz)
+      var prev = -1
       while (b < m) {
-        if (counts(b) != 0) {
-          writeVarInt(out, b - prev - 1)
-          writeVarInt(out, counts(b))
+        val c = counts(b)
+        if (c != 0) {
+          pos = Ebf.putVarInt(out, pos, b - prev - 1)
+          pos = Ebf.putVarInt(out, pos, c)
           prev = b
         }
         b += 1
       }
     } else {
-      b = 0
-      while (b < m) { writeVarInt(out, counts(b)); b += 1 }
+      while (b < m) { pos = Ebf.putVarInt(out, pos, counts(b)); b += 1 }
     }
-    var acc = 0L
-    var accBits = 0
+    pos
+  }
+
+  /** Bit-packs the fingerprints at `pos0` in (bucket, fp) order. The
+    * counts give each bucket's offset, so fingerprints are scattered
+    * into place by bucket and only each bucket's run (almost always 0-3
+    * entries) is sorted. */
+  private def writeFingerprints(out: Array[Byte], pos0: Int): Unit = {
+    val m = numBuckets
+    val w = fpWidth
+    val end = new Array[Int](m) // bucket b's next free slot, then its end
+    var off = 0
+    var b = 0
+    while (b < m) { end(b) = off; off += counts(b); b += 1 }
+    val fps = new Array[Int](numPairs)
     var i = 0
     while (i < numPairs) {
-      if (w > 0) {
-        acc |= (sorted(i) & ((1L << w) - 1)) << accBits
-        accBits += w
-        while (accBits >= 8) {
-          out.writeByte((acc & 0xff).toInt)
-          acc >>>= 8
-          accBits -= 8
-        }
+      val p = pairs(i)
+      val bk = (p >>> 32).toInt
+      fps(end(bk)) = p.toInt
+      end(bk) += 1
+      i += 1
+    }
+    var from = 0
+    b = 0
+    while (b < m) {
+      val to = end(b)
+      if (to - from > 1) java.util.Arrays.sort(fps, from, to)
+      from = to
+      b += 1
+    }
+    val mask = (1L << w) - 1
+    var pos = pos0
+    var acc = 0L
+    var accBits = 0
+    i = 0
+    while (i < numPairs) {
+      acc |= (fps(i) & mask) << accBits
+      accBits += w
+      while (accBits >= 8) {
+        out(pos) = acc.toByte
+        pos += 1
+        acc >>>= 8
+        accBits -= 8
       }
       i += 1
     }
-    if (accBits > 0) out.writeByte((acc & 0xff).toInt)
-    out.flush()
-    bos.toByteArray
-  }
-
-  def sizeBytes: Int = toBytes.length
-
-  private def writeVarInt(out: DataOutputStream, v0: Int): Unit = {
-    var v = v0
-    while ((v & ~0x7f) != 0) { out.writeByte((v & 0x7f) | 0x80); v >>>= 7 }
-    out.writeByte(v)
-  }
-
-  private def varintLen(v0: Int): Int = {
-    var v = v0
-    var len = 1
-    while ((v & ~0x7f) != 0) { v >>>= 7; len += 1 }
-    len
+    if (accBits > 0) out(pos) = acc.toByte
   }
 
   def copyOf: Ebf = Ebf.fromBytes(toBytes)
@@ -487,6 +517,33 @@ object Ebf {
     val e = new Ebf(1, 1, 0, 1, 8, 0L)
     e.loadBytes(bytes)
     e
+  }
+
+  /** Fixed header: magic, six int params, seed, n, then the mode byte. */
+  private val HeaderBytes = 4 + 6 * 4 + 2 * 8 + 1
+
+  /** Byte costs of the two counts-section forms, and the sparse
+    * form's nonzero-bucket count. */
+  private final class CountsCost(dense: Int, sparse: Int, val nnz: Int) {
+    def sparseMode: Boolean = sparse < dense
+    def bytes: Int = math.min(dense, sparse)
+  }
+
+  private def varintLen(v0: Int): Int = {
+    var v = v0
+    var len = 1
+    while ((v & ~0x7f) != 0) { v >>>= 7; len += 1 }
+    len
+  }
+
+  /** Writes `v0` as an unsigned LEB128 varint at `pos`; returns the
+    * position after it. */
+  private def putVarInt(out: Array[Byte], pos0: Int, v0: Int): Int = {
+    var v = v0
+    var pos = pos0
+    while ((v & ~0x7f) != 0) { out(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1; v >>>= 7 }
+    out(pos) = v.toByte
+    pos + 1
   }
 
   private[core] def readVarInt(in: ByteBuffer): Int = {

@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * Shape: contamination is an EQUI-join on the shingle string. The
   * benchmark side is tiny by definition (eval sets are thousands of
   * docs, the corpus is billions), so its distinct shingle set is
-  * broadcast; corpus shingling is map-side (tokenize -> sliding window
-  * -> per-doc distinct); the only shuffle is the pair-count groupBy,
-  * bounded by the number of (contaminated doc, benchmark doc, shared
-  * shingle) triples — i.e. by actual contamination, not corpus size.
+  * broadcast; corpus shingling is map-only (tokenize -> sliding window)
+  * and streams raw shingle occurrences, repeats included, into the
+  * join; per-doc dedup runs after the join as `countDistinct(shingle)`,
+  * whose map-side partial dedups the survivors. The only shuffle is the
+  * pair-count groupBy, bounded by the number of (contaminated doc,
+  * benchmark doc, shared shingle) triples — i.e. by actual
+  * contamination, not corpus size.
   * At 100 TB the broadcast carries the shingle strings themselves; if
   * the benchmark's shingle set outgrows the broadcast budget, probe
   * corpus shingles through an EBF of the benchmark shingles first
@@ -22,10 +25,10 @@ import org.apache.spark.sql.functions._
   * two-tier pattern as the sharded join-prune rule.
   *
   * Tokenization: lowercase, split on runs of whitespace (after trim);
-  * documents shorter than n tokens produce no shingles. Shingles are
-  * DISTINCT per document, so `n_shared` counts distinct shared
-  * shingles and `n_shared == n_bench_shingles` means the benchmark
-  * doc's shingle set is fully contained in the corpus doc — a graded
+  * documents shorter than n tokens produce no shingles. `n_shared`
+  * counts DISTINCT shared shingles per document pair, so
+  * `n_shared == n_bench_shingles` means the benchmark doc's shingle
+  * set is fully contained in the corpus doc — a graded
   * contamination score falls out as n_shared / n_bench_shingles.
   */
 object Decontaminate {

@@ -256,13 +256,15 @@ object Flagship {
     // the cluster; nothing is collected to the driver in this phase —
     // deployment-side movement belongs to the probe (phase 4), exactly
     // as a broadcast join charges its build-side collect to the join.
-    // 256 shards (was 64): the reduce side of the shard build is
-    // numShards tasks — 64 gave local[32] two badly packed waves while
-    // local[8] packed its eight perfectly, which alone cost ~2x in the
-    // phase's 8->32 scaling (ScalingProbe stage decomposition, PLAN13).
-    // 256 gives every level >= 8 waves; per-shard filters are a quarter
-    // the size at identical total bytes and the same per-shard FPR
-    // bound. At 10^12 rows the shard count scales with the data anyway.
+    // The shard count sets the artifact's layout, not the task count:
+    // 256 independently grown EBFs (per-shard filters a quarter the size
+    // of 64 shards' at identical total bytes and the same per-shard FPR
+    // bound; at 10^12 rows the shard count scales with the data). The
+    // build's parallelism is spark.sql.shuffle.partitions: each reduce
+    // task builds ~256/P whole shards (ShardedProbe.buildShardTable).
+    // One task per shard would make the build, its cache-forcing pass
+    // and phase 4's collect 256-task stages of ~3 ms tasks at 100k rows,
+    // bound by scheduling rather than work on a 4-core session.
     val numShards = 256
     val (shardTable, t3) = time(phase3(wp, numShards))
 

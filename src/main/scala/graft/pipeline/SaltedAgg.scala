@@ -64,11 +64,12 @@ object SaltedAgg {
   private def mergeCol(sp: SketchSpec): Column =
     sp.mergeBuilder.map(_(sp.name)).getOrElse(expr(s"${sp.mergeFn}(${sp.name})"))
 
-  /** Explicit partition count for the clustering shuffle: AQE would
-    * otherwise coalesce it toward 64MB partitions, capping the
-    * aggregation stage (where all sketch-insert work happens) at a
-    * handful of tasks regardless of cores. */
-  private def clusterParts(df: DataFrame): Int =
+  /** Explicit partition count for a clustering shuffle: the session's
+    * `spark.sql.shuffle.partitions`. AQE would otherwise coalesce it
+    * toward 64MB partitions, capping the aggregation stage (where all
+    * sketch-insert work happens) at a handful of tasks regardless of
+    * cores. Shared with [[ShardedProbe.buildShardTable]]. */
+  private[pipeline] def clusterParts(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** Unsalted single-stage counterpart (for equivalence checks / when

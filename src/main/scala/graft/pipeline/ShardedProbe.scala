@@ -28,7 +28,17 @@ object ShardedProbe {
     * re-merging one partial sketch per (scan task x shard) — trading a
     * raw-key shuffle for the elimination of the double build+merge.
     * Worth it when keys are narrow relative to sketch bytes shuffled
-    * (scanTasks x numShards partials); measured in BENCH/BASELINE.md. */
+    * (scanTasks x numShards partials); measured in BENCH/BASELINE.md.
+    *
+    * `numShards` sets the artifact's layout (key routing, one EBF per
+    * shard); the session's `spark.sql.shuffle.partitions` sets the
+    * parallelism. The exchange hashes `shard` into
+    * min(numShards, shuffle partitions) partitions — still satisfying
+    * `groupBy("shard")`, so there is one exchange — and each reduce task
+    * builds its ~numShards/P whole shards in one aggregate. A shard's
+    * bytes depend only on its key multiset, so the table is the same at
+    * any partition count; only the task count (build, cache-forcing
+    * pass, [[broadcastShards]]' collect) changes. */
   def buildShardTable(df: DataFrame, keyCol: Column, numShards: Int,
                       m0: Int = 4096, k: Int = 5, l0: Int = 16,
                       clusterFirst: Boolean = false,
@@ -46,7 +56,9 @@ object ShardedProbe {
         graft.plans.Hash128Expr.h1(col("__key"), Graft.SketchSeed).as("__h1"),
         graft.plans.Hash128Expr.h2(col("__key"), Graft.SketchSeed).as("__h2"))
     val clustered =
-      if (clusterFirst) keyed.repartition(numShards, col("shard")) else keyed
+      if (clusterFirst)
+        keyed.repartition(math.min(numShards, SaltedAgg.clusterParts(df)), col("shard"))
+      else keyed
     // nativeAgg: the TypedImperativeAggregate form reads the two hash
     // longs straight off the InternalRow — no per-row Tuple2/boxed-Long
     // converter allocation (measured ~1.8 us/row on the ScalaAggregator

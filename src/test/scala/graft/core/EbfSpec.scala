@@ -170,4 +170,36 @@ class EbfSpec extends AnyFunSuite {
     assert(keys("cap", 5000).forall(e.mightContain))
     assert(e.fprBound > 0.0 && e.fprBound <= 1.0)
   }
+
+  test("wire bytes pinned across counts modes, widths and pair orders; sizeBytes exact") {
+    // filters covering sparse and dense counts, fingerprint width 0,
+    // and pair arrays left unsorted by merge, compress and delete
+    val filters = for {
+      m0 <- Seq(32, 256, 4096)
+      k <- Seq(1, 3, 5)
+      l0 <- Seq(4, 16)
+      n <- Seq(0, 1, 50, 3000)
+    } yield {
+      val a = Ebf.empty(m0 = m0, k = k, l0 = l0, seed = 7L)
+      val b = Ebf.empty(m0 = m0, k = k, l0 = l0, seed = 7L)
+      keys(s"w$m0-$k", n).zipWithIndex.foreach { case (key, i) =>
+        (if (i % 3 == 0) a else b).insert(key)
+      }
+      val e = b.merge(a)
+      if (n == 50 && e.level > 0) e.compress()
+      if (n == 3000) assert(e.delete(s"w$m0-$k-0"))
+      e
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    filters.foreach { e =>
+      val bytes = e.toBytes
+      assert(e.sizeBytes === bytes.length)
+      md.update(bytes)
+    }
+    // SHA-256 of the bytes the stream-based encoder (one global pair
+    // sort, then DataOutputStream) wrote for these filters: the wire
+    // format may only change on purpose, together with this value
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(digest === "128ea28d0f928d7649ca461956ebae57a3e1eda107e189088a4d93a3698ad111")
+  }
 }
